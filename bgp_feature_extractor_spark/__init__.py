@@ -8,9 +8,9 @@ Design: DataFrame/SQL-first. The reference's mutable per-entity RIB state
 (`bgpmetrics_as.py:257-258`) is re-expressed as window functions over
 `(source, doc_id)` partitions; the per-bin accumulators
 (`bgpmetrics_as.py:199-253`) become one `groupBy(source, bin).agg(...)`;
-the only Python-side kernels are the Arrow-vectorized Levenshtein UDF
-(`functions/editdist.py`) and the sequential rare-token fold
-(`operators/rare.py`, quirk Q5).
+edit distance is Spark's builtin `levenshtein` over token ids encoded as
+code points (`functions/editdist.py`); the only Python-side kernel is the
+sequential rare-token fold (`operators/rare.py`, quirk Q5).
 """
 
 __version__ = "0.1.0"

@@ -1,3 +1,3 @@
-from bgp_feature_extractor_spark.functions.editdist import levenshtein_udf
+from bgp_feature_extractor_spark.functions.editdist import with_edit_distance
 
-__all__ = ["levenshtein_udf"]
+__all__ = ["with_edit_distance"]

@@ -1,82 +1,53 @@
-"""Batch-vectorized Levenshtein distance over two array<int> columns.
+"""Levenshtein distance over two array<int> token columns, inside the JVM.
 
 The reference computes an O(m*n) pure-Python DP per announcement
-(`bgpmetrics_as.py:77-102`, called at 455/529/648) — its hot spot. Spark's
-builtin ``levenshtein()`` is string-only, so this is the engine's flagship
-Arrow/pandas UDF: distances for a whole Arrow batch are computed with numpy
-in one padded (batch, L1, L2) DP where the Python-level loops run over the
-*DP grid* (≤ max_len² iterations per batch), never over rows.
+(`bgpmetrics_as.py:77-102`, called at 455/529/648). Spark's builtin
+``levenshtein()`` works on strings and counts code points, so each token
+array is encoded as a string of one code point per token and the distance
+is taken between the two strings — no Python stage, no Arrow round trip.
 
-Scale notes: cost per batch is O(Lmax² · B) vectorized adds/mins; with
-spark.sql.execution.arrow.maxRecordsPerBatch=10000 and Lmax≈15-64 this
-stays cache-resident. Null-safe: null/empty inputs yield null distance.
+Encoding (pure column expressions): an id below 0xD800 is its own code
+point; an id from 0xD800 to 0x10F7FF maps to id + 0x800, skipping the
+surrogate block. Each code point becomes 8 hex digits, the digits are
+concatenated behind a big-endian byte-order mark and decoded as UTF-32.
+The explicit mark matters: without it the decoder would read a leading
+U+FEFF (token id 0xF6FF) as a mark and drop it. Any id outside
+[0, 0x10F7FF], or a null element, raises; it is never silently mapped.
+
+Null-safe: a null array on either side yields a null distance; an empty
+array yields the length of the other side, as in the reference.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
+from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+
+MAX_TOKEN_ID = 0x10F7FF  # + 0x800 surrogate skip == 0x10FFFF, the last code point
+_BOM = "0000FEFF"
 
 
-def batch_levenshtein(a_lists: pd.Series, b_lists: pd.Series) -> pd.Series:
-    """numpy-batched unit-cost edit distance between per-row token lists."""
-    n = len(a_lists)
-    out = np.full(n, -1, dtype=np.int64)
-    a_vals = a_lists.to_numpy(dtype=object)
-    b_vals = b_lists.to_numpy(dtype=object)
-    valid = np.fromiter(
-        (a_vals[i] is not None and b_vals[i] is not None for i in range(n)),
-        dtype=bool,
-        count=n,
+def _code_point(x: Column) -> Column:
+    bad = x.isNull() | (x < 0) | (x > MAX_TOKEN_ID)
+    msg = F.concat(
+        F.lit("edit distance: token id "),
+        F.coalesce(x.cast("string"), F.lit("NULL")),
+        F.lit(f" is outside the encodable range [0, 0x{MAX_TOKEN_ID:X}]"),
     )
-    idx = np.nonzero(valid)[0]
-    if idx.size == 0:
-        return pd.Series(out).astype("Int64").mask(~valid)
-    la = np.fromiter((len(a_vals[i]) for i in idx), dtype=np.int64, count=idx.size)
-    lb = np.fromiter((len(b_vals[i]) for i in idx), dtype=np.int64, count=idx.size)
-    L1, L2 = int(la.max(initial=0)), int(lb.max(initial=0))
-    B = idx.size
-    # pad token matrices; -1 is outside any vocab so padding never matches
-    A = np.full((B, L1), -1, dtype=np.int64)
-    Bm = np.full((B, L2), -1, dtype=np.int64)
-    for k, i in enumerate(idx):
-        av, bv = a_vals[i], b_vals[i]
-        A[k, : len(av)] = av
-        Bm[k, : len(bv)] = bv
-    # DP over the grid, vectorized across the batch dimension
-    prev = np.broadcast_to(np.arange(L2 + 1, dtype=np.int64), (B, L2 + 1)).copy()
-    # clamp column inits to each row's true length so out-of-range cells are inert
-    row_result = lb.copy()  # distance for rows with empty a
-    for i in range(1, L1 + 1):
-        cur = np.empty((B, L2 + 1), dtype=np.int64)
-        cur[:, 0] = i
-        ai = A[:, i - 1][:, None]  # (B,1)
-        sub_cost = (ai != Bm).astype(np.int64)  # (B, L2)
-        for j in range(1, L2 + 1):
-            cur[:, j] = np.minimum(
-                np.minimum(prev[:, j] + 1, cur[:, j - 1] + 1),
-                prev[:, j - 1] + sub_cost[:, j - 1],
-            )
-        done = la == i
-        if done.any():
-            row_result = np.where(done, cur[np.arange(B), lb], row_result)
-        prev = cur
-    out_idx = np.where(la == 0, lb, row_result)
-    out[idx] = out_idx
-    res = pd.Series(out, dtype="float64")
-    res[~valid] = np.nan
-    return res
+    return F.when(bad, F.raise_error(msg)).when(x < 0xD800, x).otherwise(x + 0x800)
 
 
-@F.pandas_udf(T.IntegerType())
-def levenshtein_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    d = batch_levenshtein(a, b)
-    return d.astype("Int32")
+def token_string(tokens: Column) -> Column:
+    """One code point per token id, as a string column."""
+    digits = F.transform(tokens, lambda x: F.lpad(F.hex(_code_point(x)), 8, "0"))
+    return F.decode(F.unhex(F.concat(F.lit(_BOM), F.concat_ws("", digits))), "UTF-32")
 
 
 def with_edit_distance(df, new_col: str, old_col: str, out_col: str = "edit_dist"):
     """Attach edit distance where both sides are present (REANN/NADA rows,
     bgpmetrics_as.py:455,529); null elsewhere."""
-    return df.withColumn(out_col, levenshtein_udf(F.col(new_col), F.col(old_col)))
+    a, b = F.col(new_col), F.col(old_col)
+    dist = F.when(
+        a.isNotNull() & b.isNotNull(), F.levenshtein(token_string(a), token_string(b))
+    )
+    return df.withColumn(out_col, dist)

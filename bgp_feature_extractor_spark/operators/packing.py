@@ -21,10 +21,15 @@ source), like an AQE rule:
 2. :func:`injective_partition_tokens` — for each slot p, an int token x_p
    with ``pmod(murmur3(x_p), n_parts) == p`` (found with one tiny Spark
    job so the hash is bit-identical to HashPartitioning's murmur3 seed 42).
-3. :func:`repartition_packed` — broadcast-join the source -> token map and
-   ``repartition(n_parts, token)``: one ordinary hash shuffle whose
+3. :func:`repartition_packed` — broadcast-join the source -> token table
+   and ``repartition(n_parts, token)``: one ordinary hash shuffle whose
    placement is exactly the planned packing. No sampling pass, no
-   collisions, deterministic across runs.
+   collisions, deterministic across runs. The table is a JSON literal
+   inlined inside the JVM (``session.literal_rows``), not
+   ``createDataFrame(list)``, whose Python-RDD job would start a second
+   Python worker pool. It stays a join: a literal map lookup in a
+   projection scans the keys on every row, so its per-row cost grows with
+   the number of sources.
 
 At 10^12-row scale with 10^4+ sources the same path applies unchanged:
 the stats aggregate is still one row per source, and the LPT plan keeps
@@ -35,6 +40,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from bgp_feature_extractor_spark.session import literal_rows
 
 
 def lpt_assign(sizes: list[tuple[str, int]], n_parts: int) -> dict[str, int]:
@@ -104,9 +111,12 @@ def repartition_packed(
         n_parts = max(1, min(len(sizes), 2 * spark.sparkContext.defaultParallelism))
     assign = lpt_assign(sizes, n_parts)
     tokens = injective_partition_tokens(spark, n_parts)
-    dim = spark.createDataFrame(
-        [(k, tokens[p]) for k, p in assign.items()], [key_col, "_pack_x"]
-    ).withColumn("_pack_x", F.col("_pack_x").cast("int"))
+    key_type = df.schema[key_col].dataType.simpleString()
+    dim = literal_rows(
+        spark,
+        [{key_col: k, "_pack_x": tokens[p]} for k, p in assign.items()],
+        f"`{key_col}` {key_type}, _pack_x int",
+    )
     fallback = F.element_at(
         F.array(*[F.lit(t) for t in tokens]),
         (F.pmod(F.hash(F.col(key_col)), F.lit(n_parts)) + 1).cast("int"),

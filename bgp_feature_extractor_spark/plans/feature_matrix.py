@@ -5,7 +5,7 @@ Physical shape (local[N] and cluster alike):
   scan events (+ snapshot union)
     -> window classify             # shuffle 1: hash by (source, doc_id)
     -> bin column                  # broadcast join of per-source first_ts
-    -> Arrow Levenshtein UDF       # map-side, on the uniform partitions
+    -> JVM Levenshtein             # map-side projection, same partitions
     -> groupBy(source, bin)        # shuffle 2: partial+final hash agg
     -> rare per-bin aggregates     # side branch: SLIM projection shuffled by
                                    # source, per-bin partials broadcast back
@@ -80,9 +80,9 @@ def feature_matrix(
     classified = classify(events, snapshot, cfg)
     binned = with_bin(classified, firsts, cfg)
     # edit distance BEFORE the per-source rare shuffle: here the data is
-    # still hash-partitioned by (source, doc_id) so the Arrow UDF runs on
-    # uniform partitions, and prev_tokens can be dropped before the skewed
-    # rare exchange (hot sources shuffle ~40% less bytes)
+    # still hash-partitioned by (source, doc_id) so the JVM projection runs
+    # on uniform partitions, and prev_tokens can be dropped before the
+    # skewed rare exchange (hot sources shuffle ~40% less bytes)
     dist = with_edit_distance(binned, "tokens", "prev_tokens").drop("prev_tokens")
     # rare branch reads the RAW events (cheap pruned re-scan), not the
     # classifier output — otherwise the classify window executes twice
@@ -147,7 +147,7 @@ def multi_width_matrices(
 
     The expensive stages are width-INDEPENDENT — classification (the as-of
     state machine: one hash exchange by (source, doc_id) + three window
-    passes), the Arrow Levenshtein UDF, and the Q5 per-source sequential
+    passes), the edit distance, and the Q5 per-source sequential
     rare recurrence depend only on event order, never on ``bin_size``
     (reference: widths only change the bin divisor,
     bgpmetrics_as.py:279-280). They are computed ONCE here and persisted

@@ -7,9 +7,24 @@ raised to ~2-3x total cores and AQE re-coalesces at runtime.
 
 from __future__ import annotations
 
+import json
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+
+def default_driver_memory() -> str:
+    """48g, or half the host's physical memory where that is less. G1
+    grows the heap toward its maximum under allocation bursts rather than
+    collecting; a maximum above physical memory lets a long session's JVM
+    grow until the kernel's OOM killer ends it (a 48g heap on a 16 GB host
+    passed 15 GB resident during the test suite)."""
+    try:
+        phys_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**30
+    except (ValueError, OSError):
+        return "48g"
+    return f"{max(1, min(48, phys_gb // 2))}g"
 
 
 def get_spark(
@@ -45,7 +60,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # local mode: the driver heap IS the executor heap — size it for the
         # thread count (32 tasks x wide hash-agg state thrash an 8g heap)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
@@ -53,3 +71,14 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def literal_rows(spark: SparkSession, rows: list[dict], ddl: str) -> DataFrame:
+    """A few local Python rows (dicts keyed by the ``ddl`` field names) as a
+    DataFrame built inside the JVM: one JSON literal, parsed and inlined
+    over a one-row, one-partition range, which the optimizer folds to a
+    literal Generate. ``spark.createDataFrame(list)`` would pickle the
+    rows through a Python-RDD job instead, starting a second Python worker
+    pool beside the Arrow one for a handful of rows."""
+    parsed = F.from_json(F.lit(json.dumps(rows)), f"array<struct<{ddl}>>")
+    return spark.range(0, 1, 1, numPartitions=1).select(F.inline(parsed))

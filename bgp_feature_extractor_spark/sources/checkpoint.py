@@ -24,6 +24,10 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bgp_feature_extractor_spark.session import literal_rows
+
+_LINEAGE_DDL = "stage string, bucket int, row_count bigint, status string, wall_ms bigint"
+
 
 class CheckpointManager:
     def __init__(self, base_path: str, n_buckets: int = 32):
@@ -37,10 +41,7 @@ class CheckpointManager:
     def lineage(self, spark: SparkSession) -> DataFrame:
         p = self._lineage_path()
         if not os.path.isdir(p):
-            return spark.createDataFrame(
-                [],
-                "stage string, bucket int, row_count long, status string, wall_ms long",
-            )
+            return literal_rows(spark, [], _LINEAGE_DDL)
         return spark.read.parquet(p)
 
     def completed_buckets(self, spark: SparkSession, stage: str) -> set[int]:
@@ -53,14 +54,8 @@ class CheckpointManager:
         )
         return {r["bucket"] for r in rows}
 
-    def _append_lineage(self, spark: SparkSession, rows: list[tuple]) -> None:
-        df = spark.createDataFrame(
-            rows, "stage string, bucket int, row_count long, status string, wall_ms long"
-        )
-        # repartition(1), not coalesce(1): shuffle-free coalesce of a
-        # parallelized local list pays one python-runner round trip per
-        # source sub-partition (~6s measured for 8 rows on local[32])
-        df.repartition(1).write.mode("append").parquet(self._lineage_path())
+    def _append_lineage(self, spark: SparkSession, rows: list[dict]) -> None:
+        literal_rows(spark, rows, _LINEAGE_DDL).write.mode("append").parquet(self._lineage_path())
 
     # -- stage execution ----------------------------------------------------
     def bucket_col(self, key_col: str = "source"):
@@ -85,37 +80,47 @@ class CheckpointManager:
         todo = [b for b in range(self.n_buckets) if b not in done]
         group = buckets_per_job or len(todo) or 1
         tagged = input_df.withColumn("_bucket", self.bucket_col(key_col))
+
+        def bucketed_output(df: DataFrame) -> DataFrame:
+            return transform(df).withColumn("_bucket", self.bucket_col(key_col))
+
+        # the data path is read with the transform's schema, never inferred:
+        # a bucket group holding none of the input's keys writes no files,
+        # and schema inference over a path with no files raises
+        schema = None
         jobs = 0
         for i in range(0, len(todo), group):
             if max_jobs is not None and jobs >= max_jobs:
                 break
             chunk = todo[i : i + group]
             t0 = time.perf_counter()
-            subset = tagged.filter(F.col("_bucket").isin(chunk))
-            out = transform(subset.drop("_bucket")).withColumn(
-                "_bucket", self.bucket_col(key_col)
-            )
+            out = bucketed_output(tagged.filter(F.col("_bucket").isin(chunk)).drop("_bucket"))
+            schema = out.schema
             out.write.mode("append").partitionBy("_bucket").parquet(data_path)
             wall = int((time.perf_counter() - t0) * 1000)
             # per-bucket row counts for the lineage metrics
             counts = {
                 r["_bucket"]: r["n"]
-                for r in spark.read.parquet(data_path)
+                for r in spark.read.schema(schema)
+                .parquet(data_path)
                 .filter(F.col("_bucket").isin(chunk))
                 .groupBy("_bucket")
                 .agg(F.count(F.lit(1)).alias("n"))
                 .collect()
             }
+            done_row = dict(stage=stage, status="done", wall_ms=wall)
             self._append_lineage(
-                spark,
-                [(stage, int(b), int(counts.get(b, 0)), "done", wall) for b in chunk],
+                spark, [dict(done_row, bucket=b, row_count=counts.get(b, 0)) for b in chunk]
             )
             jobs += 1
         if not os.path.isdir(data_path):
             return transform(input_df.limit(0))
+        if schema is None:
+            schema = bucketed_output(input_df.limit(0)).schema
         done_now = self.completed_buckets(spark, stage)
         return (
-            spark.read.parquet(data_path)
+            spark.read.schema(schema)
+            .parquet(data_path)
             .filter(F.col("_bucket").isin(list(done_now)))
             .drop("_bucket")
         )

@@ -6,7 +6,7 @@ contention waves), times each sub-plan with the noop sink (min of 2), and
 prints one JSON line. Sub-plans:
 
   classify            window classification only
-  editdist            classify + bin + Arrow Levenshtein
+  editdist            classify + bin + edit distance
   main_agg            the ~110-column codegen HashAggregate over dist
   fold_stats          fold_bin_aggregates' stats pass alone
   fold_full           full fold_bin_aggregates (3 aggs + joins)

@@ -20,6 +20,9 @@ import subprocess
 import sys
 import time
 
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from bgp_feature_extractor_spark.session import default_driver_memory  # noqa: E402
+
 ROWS = int(sys.argv[1]) if len(sys.argv) > 1 else 2_000_000
 N = int(sys.argv[2]) if len(sys.argv) > 2 else 4
 ROUNDS = int(sys.argv[3]) if len(sys.argv) > 3 else 6
@@ -207,7 +210,7 @@ def main():
         # child JVM heap cap: the r5 64M run OOM-killed at the 48g default
         # (2 children + leaked tmpfs shuffle > box RAM) and reran at 36g —
         # heap size can shift timings, so rows carry it for comparability
-        "driver_mem": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
+        "driver_mem": os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
         f"sec@{N}": round(tn, 3), f"sec@{4*N}": round(t4n, 3),
         f"all_sec@{N}": [round(t, 2) for t in times[N]],
         f"all_sec@{4*N}": [round(t, 2) for t in times[4 * N]],

@@ -3,11 +3,8 @@ identical output and that completed buckets are skipped."""
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
+import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from bgp_feature_extractor_spark.config import EngineConfig
 from bgp_feature_extractor_spark.oracle import make_events_updates
@@ -64,3 +61,27 @@ def test_resume_skips_completed_buckets(spark, base):
     again = cm.run_stage("matrix", ev, _transform)
     assert again.count() == len(got)
     assert len(cm.lineage(spark).collect()) == len(lin)
+
+
+def test_empty_buckets_complete_and_match_one_shot(spark, base):
+    """More buckets than sources, one bucket per job: groups that hold none
+    of the input's sources write no files, and the stage must still read
+    its output back (with the transform's schema), record every bucket as
+    done and return exactly the one-shot matrix."""
+    ev = events_sdf(spark, make_events_updates(n_events=600, n_sources=2))
+    cm = CheckpointManager(base, n_buckets=8)
+    used = {r[0] for r in ev.select(cm.bucket_col()).distinct().collect()}
+    assert 0 not in used and len(used) < 8  # the first group is empty
+
+    got = cm.run_stage("matrix", ev, _transform, buckets_per_job=1).toPandas()
+
+    lin = cm.stage_metrics(spark, "matrix").toPandas()
+    assert sorted(lin["bucket"]) == list(range(8))
+    assert (lin["status"] == "done").all()
+    assert lin["row_count"].sum() == len(got)
+
+    want = feature_matrix(ev, None, CFG).toPandas()
+    key = ["source", "bin"]
+    got = got[want.columns].sort_values(key).reset_index(drop=True)
+    want = want.sort_values(key).reset_index(drop=True)
+    pd.testing.assert_frame_equal(got, want, check_dtype=False)

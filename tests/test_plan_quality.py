@@ -208,7 +208,66 @@ def test_rare_exact_plan_uses_packed_exchange(spark, events_parquet):
     assert "rangepartitioning(source" not in plan
 
 
-def test_materialized_frees_all_caches(spark):
+def _plan_nodes(root):
+    """Every physical node under the JVM plan node ``root``: through
+    adaptive plans, query stages and into the plans behind cached
+    relations."""
+    stack = [root]
+    while stack:
+        node = stack.pop()
+        yield node
+        cls = node.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            stack.append(node.executedPlan())
+            continue
+        if cls.endswith("QueryStageExec"):
+            stack.append(node.plan())
+            continue
+        if cls == "InMemoryTableScanExec":
+            stack.append(node.relation().cachedPlan())
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+
+
+@pytest.mark.parametrize("plan", ["feature_matrix", "multi_width_matrices"])
+def test_matrix_plans_have_one_python_stage(spark, events_parquet, plan):
+    """Edit distance runs in the JVM (no ArrowEvalPython); the only Python
+    node is the rare kernel's MapInArrow; the LPT packing table on the
+    packed exchange's broadcast side is built in the JVM (an ExistingRDD
+    scan there is a createDataFrame(list) job that starts a second Python
+    worker pool)."""
+    from bgp_feature_extractor_spark.plans.feature_matrix import multi_width_matrices
+
+    caches = []
+    if plan == "feature_matrix":
+        df = feature_matrix(events_parquet, None, EngineConfig())
+    else:
+        df = multi_width_matrices(events_parquet, None, EngineConfig(), caches=caches)
+    try:
+        nodes = list(_plan_nodes(df._jdf.queryExecution().executedPlan()))
+        python = [
+            n.nodeName() for n in nodes if ".execution.python." in n.getClass().getName()
+        ]
+        assert "ArrowEvalPython" not in python
+        assert python == ["MapInArrow"], python
+        packed = [
+            n
+            for n in nodes
+            if n.nodeName() == "BroadcastExchange" and "_pack_x" in n.output().toString()
+        ]
+        assert packed, "rare stage lost the broadcast packing join"
+        for bx in packed:
+            scans = [n.nodeName() for n in _plan_nodes(bx)]
+            assert not any("ExistingRDD" in s for s in scans), scans
+    finally:
+        for c in caches:
+            c.unpersist()
+
+
+@pytest.mark.parametrize(
+    "query", ["minhash_lsh", "multi_width", "multi_width_labeled", "multi_width_rare"]
+)
+def test_materialized_frees_all_caches(spark, query):
     """The real zero-residual-persistence check behind ``_materialized``
     (VERDICT r5 #2): after a cache-using declared query returns and its
     result frame is unpersisted, no persistent RDD introduced by the query
@@ -216,14 +275,15 @@ def test_materialized_frees_all_caches(spark):
     pre-query persisted ids so the check is order-independent under the
     session-scoped fixture."""
     import __spark_entry__ as entrymod
+    from tests.test_entry_oracle import SF_DIR
 
     def persisted_ids():
         jmap = spark.sparkContext._jsc.getPersistentRDDs()
         return {k for k in jmap.keySet().toArray()}
 
     before = persisted_ids()
-    out = entrymod.queries()["minhash_lsh"](spark, "/root/testdata/sf0.001")
+    out = entrymod.queries()[query](spark, SF_DIR)
     out.count()
     out.unpersist()
     leaked = persisted_ids() - before
-    assert leaked == set(), f"persistent RDDs leaked by minhash_lsh: {leaked}"
+    assert leaked == set(), f"persistent RDDs leaked by {query}: {leaked}"

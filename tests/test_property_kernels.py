@@ -1,8 +1,10 @@
-"""Hypothesis property tests for the two numpy kernels (no Spark):
+"""Property tests for the engine's kernels against plain-Python oracles:
 
-* batch_levenshtein == the reference's pure-python DP
-  (bgpmetrics_as.py:77-102 semantics: unit-cost edit distance) on random
-  batches including None/empty rows;
+* the JVM edit distance (functions/editdist.py) == the reference's
+  pure-Python DP (oracle.reference_oracle.levenshtein;
+  bgpmetrics_as.py:77-102 semantics: unit-cost edit distance) over one
+  DataFrame of generated pairs including null/empty rows and the ids at
+  the code-point encoding's boundaries;
 * rare_counts_from_flat == rare_counts_loop (the dict-loop transliteration
   of the reference control flow) on random token streams across random
   block sizes — the vectorized decomposition (occurrence index /
@@ -12,49 +14,57 @@
 
 from __future__ import annotations
 
+import random
+
 import numpy as np
-import pandas as pd
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
-from bgp_feature_extractor_spark.functions.editdist import batch_levenshtein
+from bgp_feature_extractor_spark.functions.editdist import with_edit_distance
 from bgp_feature_extractor_spark.operators.rare import (
     rare_counts_exact,
     rare_counts_loop,
 )
+from bgp_feature_extractor_spark.oracle.reference_oracle import levenshtein
+
+# ids either side of the surrogate skip and the range's end, and the ids
+# encoded as U+FEFF and U+FFFE (byte-order marks when they lead a UTF-32
+# string: 0xF6FF + 0x800, 0xF7FE + 0x800)
+BOM_IDS = [0xF6FF, 0xF7FE]
+BOUNDARY_IDS = [0xD7FF, 0xD800, 0xDFFF, 0x10F7FF, *BOM_IDS, 0xFFFF, 0x10000]
+ALPHABET = [0, 1, 2, 3, 4] + BOUNDARY_IDS
+PAIR_DDL = "a array<int>, b array<int>"
 
 
-def _ref_levenshtein(a, b):
-    """Reference semantics: plain unit-cost DP (bgpmetrics_as.py:77-102)."""
-    m, n = len(a), len(b)
-    prev = list(range(n + 1))
-    for i in range(1, m + 1):
-        cur = [i] + [0] * n
-        for j in range(1, n + 1):
-            cur[j] = min(
-                prev[j] + 1,
-                cur[j - 1] + 1,
-                prev[j - 1] + (0 if a[i - 1] == b[j - 1] else 1),
-            )
-        prev = cur
-    return prev[n]
+def test_jvm_levenshtein_matches_reference_dp(spark):
+    rng = random.Random(20260418)
+
+    def tokens():
+        r = rng.random()
+        if r < 0.1:
+            return None
+        if r < 0.2:
+            return []
+        return [rng.choice(ALPHABET) for _ in range(rng.randint(1, 12))]
+
+    pairs = [(tokens(), tokens()) for _ in range(3000)]
+    pairs += [([t], [t]) for t in BOUNDARY_IDS] + [([t], [t + 1]) for t in BOUNDARY_IDS[:3]]
+    pairs += [([t, 5], [5]) for t in BOM_IDS] + [([t], []) for t in BOM_IDS]
+    pairs += [(None, [1]), ([1], None), (None, None), ([], [])]
+    df = spark.createDataFrame([(i, a, b) for i, (a, b) in enumerate(pairs)], f"i int, {PAIR_DDL}")
+    got = {r["i"]: r["edit_dist"] for r in with_edit_distance(df, "a", "b").collect()}
+    for i, (a, b) in enumerate(pairs):
+        want = None if a is None or b is None else levenshtein(a, b)
+        assert got[i] == want, (a, b, got[i], want)
 
 
-tok_list = st.lists(st.integers(min_value=0, max_value=9), max_size=12)
-maybe_list = st.one_of(st.none(), tok_list)
-
-
-@settings(max_examples=60, deadline=None)
-@given(st.lists(st.tuples(maybe_list, maybe_list), min_size=1, max_size=20))
-def test_batch_levenshtein_matches_reference_dp(pairs):
-    a = pd.Series([p[0] for p in pairs], dtype=object)
-    b = pd.Series([p[1] for p in pairs], dtype=object)
-    got = batch_levenshtein(a, b)
-    for i, (x, y) in enumerate(pairs):
-        if x is None or y is None:
-            assert pd.isna(got.iloc[i])
-        else:
-            assert got.iloc[i] == _ref_levenshtein(x, y), (x, y)
+@pytest.mark.parametrize("bad", [0x10F800, -1, None])
+def test_jvm_levenshtein_rejects_ids_outside_code_point_range(spark, bad):
+    df = spark.createDataFrame([([1, bad], [1])], PAIR_DDL)
+    with pytest.raises(Exception, match=r"\[0, 0x10F7FF\]"):
+        with_edit_distance(df, "a", "b").select(F.col("edit_dist")).collect()
 
 
 @settings(max_examples=40, deadline=None)
